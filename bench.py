@@ -93,8 +93,8 @@ def main() -> None:
         "lsh_verified_pairs",
         lambda: run_full(minhash.minhash_dup_pairs(narrow, cfg, eager=True)),
     )
-    # no eager: the simhash value rides through the salted join (carry), so
-    # the fold is referenced once — nothing to pre-materialize
+    # simhash_dup_pairs takes no eager=: the simhash value rides through the
+    # salted join (carry), so the fold is referenced once
     timed(
         "simhash_pairs",
         lambda: run_full(simhash.simhash_dup_pairs(narrow, cfg)),

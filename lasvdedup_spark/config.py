@@ -159,7 +159,7 @@ class DedupConfig:
 
     # --- scale / skew controls ---
     max_bucket_size: Optional[int] = None  # cap LSH bucket fan-out; None = exact
-    salt_buckets: int = 8                  # salt fan-out for skewed bucket joins (<=1 disables)
+    salt_buckets: int = 8                  # salt fan-out for hot keys (>= 1)
     skew_bucket_cutoff: int = 1024         # buckets larger than this take the salted path
     shuffle_partitions: int = 32
 

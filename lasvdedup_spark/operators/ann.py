@@ -162,16 +162,6 @@ def ann_buckets_multi(
     )
 
 
-def ann_capped_buckets(buckets: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    """Optional bucket-size cap (same deterministic hash-rank rule as
-    minhash.capped_buckets — keep the cap lowest-(xxhash64(id, bucket), id)
-    rows, selected with no single-task mega-bucket sort); callers log the
-    dropped count — never a silent truncation (pipeline metrics pattern)."""
-    from lasvdedup_spark.operators.pairs import capped_by_key
-
-    return capped_by_key(buckets, "bucket", max_bucket_size)
-
-
 def cosine_dup_pairs(
     vectors: DataFrame,
     planes: list[list[int]] | list[list[list[int]]],
@@ -189,11 +179,11 @@ def cosine_dup_pairs(
     salted bucket join for skew, verify on the candidate set only. The
     wide vector columns join in AFTER pair dedup, so vectors are never
     shuffled through the bucket join. -> (id_a, id_b, cosine)."""
-    from lasvdedup_spark.operators.pairs import salted_pair_join
+    from lasvdedup_spark.operators.pairs import capped_by_key, salted_pair_join
 
     tables = _as_tables(planes)
-    b = ann_capped_buckets(
-        ann_buckets_multi(vectors, tables, id_col, vec_col), max_bucket_size
+    b = capped_by_key(
+        ann_buckets_multi(vectors, tables, id_col, vec_col), "bucket", max_bucket_size
     )
     cand = salted_pair_join(b, "bucket", salt_buckets, skew_cutoff, "n_tables")
     v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
@@ -432,11 +422,12 @@ def ann_lsh_topk(
     window needs BOTH orientations of each pair, so the unordered pairs
     are expanded with a union of the swap afterwards. Collision counts
     are orientation-symmetric, so the expansion is exact."""
+    from lasvdedup_spark.operators.pairs import capped_by_key, salted_pair_join
+
     tables = _as_tables(planes)
-    b = ann_capped_buckets(
-        ann_buckets_multi(vectors, tables, id_col, vec_col), max_bucket_size
+    b = capped_by_key(
+        ann_buckets_multi(vectors, tables, id_col, vec_col), "bucket", max_bucket_size
     )
-    from lasvdedup_spark.operators.pairs import salted_pair_join
 
     # lazy checkpoint: the orientation expansion references the unordered
     # pairs twice; without it the whole salted-join subtree executes twice

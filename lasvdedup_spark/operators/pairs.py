@@ -6,11 +6,17 @@ buckets (ann). All three share the same scale hazard: a boilerplate key
 with m members puts m^2/2 pair enumerations in one task. The fix is the
 north rule's salted join, written once.
 
+Every operator here routes through ``_split_hot``, the one small-key /
+hot-key split: a key-size census, checkpointed once, and two broadcast
+probes that divide the rows into cold keys (at most ``cutoff`` members)
+and hot keys. Cold keys take the plain path, hot keys the salted (or, for
+``capped_by_key``, the thresholded) path.
+
 Lazy by construction: no action runs at plan-composition time (the round-1
 version ran an isEmpty() census to route around the salt machinery; that
 executed the whole upstream subtree just to build a plan and made the
 operator illegal on streaming DataFrames). Instead the plan is always
-  plain(small keys, via left_anti)  UNION  salted(big keys, via left_semi)
+  plain(cold keys, via left_anti)  UNION  salted(hot keys, via left_semi)
 and when no key exceeds the cutoff the salted side is simply empty at
 runtime — the empty case costs one map-side-combinable size census and two
 broadcast probes, not a driver-side branch.
@@ -20,6 +26,31 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _split_hot(
+    keyed: DataFrame, key_col: str, cutoff: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """-> (cold_rows, hot_rows, hot_keys): the rows of ``keyed`` whose key
+    has at most ``cutoff`` members, the rows whose key has more, and the
+    one-column table of those hot keys.
+
+    Spark has no cross-subtree CSE, so both shared inputs get a lazy
+    checkpoint (still no job at composition time): ``keyed`` feeds the
+    census and both probes, and the census feeds every broadcast probe —
+    without its own checkpoint the full census aggregation appears once
+    per probe in the physical plan (4 Exchange census subtrees in the r06
+    before-plans of a self-join)."""
+    keyed = keyed.localCheckpoint(eager=False)
+    sizes = keyed.groupBy(key_col).agg(F.count("*").alias("_ksz"))
+    hot_keys = (
+        sizes.where(F.col("_ksz") > cutoff)
+        .select(key_col)
+        .localCheckpoint(eager=False)
+    )
+    cold = keyed.join(F.broadcast(hot_keys), key_col, "left_anti")
+    hot = keyed.join(F.broadcast(hot_keys), key_col, "left_semi")
+    return cold, hot, hot_keys
 
 
 def salted_pair_join(
@@ -45,7 +76,9 @@ def salted_pair_join(
     side replicates to every salt; joining on (key, salt) yields each
     unordered pair exactly once (from the orientation where the smaller id
     sits on the left) while spreading the key's pair space over S tasks.
-    AQE skew-join stays on as a backstop for milder imbalance.
+    AQE skew-join stays on as a backstop for milder imbalance. S =
+    ``salt_buckets`` must be >= 1; S=1 keeps the hot/cold split but
+    gives a hot key a single task.
 
     carry: optional NARROW per-id payload column in ``keyed`` to ride
     through the join into the output as <carry>_a / <carry>_b. For a
@@ -63,6 +96,8 @@ def salted_pair_join(
     derivable from the two fingerprints), a map-side filter then yields
     each pair exactly once with NO shuffle at all.
     """
+    if salt_buckets < 1:
+        raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
     kid = F.col(id_col)
     pa, pb = (f"{carry}_a", f"{carry}_b") if carry else (None, None)
 
@@ -84,35 +119,7 @@ def salted_pair_join(
     # the same (id_a, id_b) groups while letting it ride the aggregation
     group_cols = ["id_a", "id_b"] + ([pa, pb] if carry else [])
 
-    if salt_buckets <= 1:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        joined = a.join(b, key_col).where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        if not dedup:
-            return joined.select(*_pair_cols())
-        return joined.select(*_pair_cols()).groupBy(*group_cols).agg(
-            F.count("*").alias(count_alias)
-        )
-
-    # Referenced by three subtrees (census, small path, salted path); lazy
-    # localCheckpoint so the upstream pipeline runs once per action, not
-    # three times (Spark has no cross-subtree CSE). Lazy = still no job at
-    # composition time.
-    keyed = keyed.localCheckpoint(eager=False)
-    sizes = keyed.groupBy(key_col).agg(F.count("*").alias("_ksz"))
-    # The census result is itself referenced FOUR times (anti probe x2 via
-    # the a/b aliases, semi probe x2) and Spark has no cross-subtree CSE:
-    # without its own lazy checkpoint the full census aggregation — a
-    # complete pass over `keyed` plus an exchange — appears four times in
-    # the physical plan (4 Exchange census subtrees measured in the r06
-    # before-plans). Checkpointing the tiny over-cutoff key list runs the
-    # census once; the four broadcast builds then scan the cached result.
-    big = (
-        sizes.where(F.col("_ksz") > skew_cutoff)
-        .select(key_col)
-        .localCheckpoint(eager=False)
-    )
-
-    small = keyed.join(F.broadcast(big), key_col, "left_anti")
+    small, skewed, _ = _split_hot(keyed, key_col, skew_cutoff)
     plain = (
         small.alias("a")
         .join(small.alias("b"), key_col)
@@ -120,7 +127,6 @@ def salted_pair_join(
         .select(*_pair_cols())
     )
 
-    skewed = keyed.join(F.broadcast(big), key_col, "left_semi")
     s = salt_buckets
     left = skewed.withColumn("_salt", F.pmod(F.xxhash64(kid), F.lit(s)))
     right = skewed.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
@@ -172,7 +178,8 @@ def salted_cross_join(
     by construction (IVF: every target lives in exactly one inverted
     list), the groupBy would be a full extra exchange of the candidate set
     that deduplicates nothing."""
-    lid, rid = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    if salt_buckets < 1:
+        raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
 
     def _out(a: str = "a", b: str = "b") -> list:
         return [
@@ -180,36 +187,15 @@ def salted_cross_join(
             F.col(f"{b}.{id_col}").alias(out_right),
         ]
 
-    if salt_buckets <= 1:
-        joined = left.alias("a").join(right.alias("b"), key_col)
-        if not dedup:
-            return joined.select(*_out())
-        return joined.select(*_out()).groupBy(out_left, out_right).agg(
-            F.count("*").alias(count_alias)
-        )
-
     left = left.localCheckpoint(eager=False)
-    right = right.localCheckpoint(eager=False)
-    sizes = right.groupBy(key_col).agg(F.count("*").alias("_ksz"))
-    # single census: see salted_pair_join — `big` feeds three broadcast
-    # probes; without its own checkpoint the census pass over `right`
-    # replicates per probe
-    big = (
-        sizes.where(F.col("_ksz") > skew_cutoff)
-        .select(key_col)
-        .localCheckpoint(eager=False)
-    )
-
-    r_small = right.join(F.broadcast(big), key_col, "left_anti")
+    r_small, r_big, big = _split_hot(right, key_col, skew_cutoff)
     plain = left.alias("a").join(r_small.alias("b"), key_col).select(*_out())
 
     s = salt_buckets
     l_big = left.join(F.broadcast(big), key_col, "left_semi").withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1)))
     )
-    r_big = right.join(F.broadcast(big), key_col, "left_semi").withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s))
-    )
+    r_big = r_big.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s)))
     salted = l_big.alias("a").join(r_big.alias("b"), [key_col, "_salt"]).select(*_out())
 
     both = plain.unionByName(salted)
@@ -238,7 +224,8 @@ def capped_by_key(
     keeps a uniform deterministic sample and never materializes a
     total order:
 
-      1. broadcast census of over-cap keys (map-side-combinable count);
+      1. broadcast census of over-cap keys (``_split_hot`` with
+         cutoff=cap: one map-side-combinable count);
       2. under-cap keys pass through untouched (left_anti probe);
       3. over-cap keys find their cap-th smallest (hash, id) via a
          two-level top-cap aggregation — each (key, salt) partial sorts
@@ -263,22 +250,9 @@ def capped_by_key(
     # sort of a mega-bucket at m/S rows without changing the result
     thin_salts = 64
     h = F.xxhash64(F.col(id_col), F.col(key_col))
-    keyed = keyed.localCheckpoint(eager=False)
-
-    sizes = keyed.groupBy(key_col).agg(F.count("*").alias("_ksz"))
-    # single census (see salted_pair_join): `big` feeds two broadcast
-    # probes; checkpoint so the census pass over `keyed` runs once
-    big = (
-        sizes.where(F.col("_ksz") > cap)
-        .select(key_col)
-        .localCheckpoint(eager=False)
-    )
-    small = keyed.join(F.broadcast(big), key_col, "left_anti")
-
-    big_rows = (
-        keyed.join(F.broadcast(big), key_col, "left_semi")
-        .withColumn("_h", h)
-        .withColumn("_salt", F.pmod(F.col("_h"), F.lit(thin_salts)))
+    small, big_rows, _ = _split_hot(keyed, key_col, cap)
+    big_rows = big_rows.withColumn("_h", h).withColumn(
+        "_salt", F.pmod(F.col("_h"), F.lit(thin_salts))
     )
     # explicit field names: struct <= struct comparison requires the two
     # struct types (incl. field names) to match exactly

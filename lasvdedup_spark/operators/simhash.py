@@ -171,7 +171,6 @@ def simhash_dup_pairs(
     pages: DataFrame,
     cfg: DedupConfig,
     id_col: str = "url",
-    eager: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, hamming) for all pairs with hamming <= cfg.simhash_hamming.
 
@@ -204,10 +203,6 @@ def simhash_dup_pairs(
     exchanges (only the skew census + broadcast probes remain). Measured
     at sf0.1 x10 expansion (87.5M result pairs): the dedup exchange
     carried ~350M rows; the filter removes it outright.
-
-    eager=True localCheckpoints the fold first — only useful when the
-    caller composes this result into something that scans it repeatedly;
-    kept for API symmetry with minhash_dup_pairs.
     """
     if cfg.simhash_hamming > N_BANDS - 1:
         raise ValueError(
@@ -217,8 +212,6 @@ def simhash_dup_pairs(
     from lasvdedup_spark.operators.pairs import salted_pair_join
 
     sh = simhash(pages, id_col, hash_family=cfg.hash_family)
-    if eager:
-        sh = sh.localCheckpoint(eager=True)
     keyed = simhash_bands(sh).select(
         "id",
         (

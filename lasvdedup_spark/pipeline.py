@@ -51,31 +51,21 @@ class StageRunner:
         spark: SparkSession,
         cfg: DedupConfig,
         force: bool = False,
-        extra_key: str = "",
+        tiers: tuple[str, ...] = ("minhash",),
+        quality_cols: tuple[str, ...] = (),
         collect_metrics: bool = False,
     ):
         """force=True recomputes every stage even when a finished checkpoint
         exists — the reference's ``--force`` rerun semantics
         (/root/reference/lasvdedup/cli.py:42-43, Snakemake --forceall).
 
-        extra_key extends the content address beyond DedupConfig for
-        call-level semantics (tiers, quality_cols): two dedup() calls with
-        the same config but different tiers MUST NOT share checkpoints —
-        the edge set differs."""
+        tiers/quality_cols are the dedup() call's arguments: they extend
+        the content address beyond DedupConfig (see checkpoint_root)."""
         self.spark = spark
         self.cfg = cfg
         self.force = force
         self.collect_metrics = collect_metrics
-        self.root = (
-            os.path.join(
-                cfg.checkpoint_dir,
-                cfg.fingerprint()
-                + extra_key
-                + f"-f{CHECKPOINT_FORMAT_VERSION}",
-            )
-            if cfg.checkpoint_dir
-            else None
-        )
+        self.root = checkpoint_root(cfg, tiers, quality_cols)
         self.metrics: list[dict] = []
 
     def _path(self, stage: str) -> str:
@@ -237,8 +227,9 @@ def _call_key(tiers: tuple[str, ...], quality_cols: tuple[str, ...]) -> str:
     """Checkpoint-address suffix for call-level (non-DedupConfig) semantics.
     tiers/quality_cols change stage outputs: two dedup() calls with the same
     config but different tiers MUST NOT share checkpoints — the edge set
-    differs. Shared by dedup() and stage_plan() so --dry-run reports
-    done-ness from the directory the real run will actually use."""
+    differs. Part of checkpoint_root, which dedup() (through StageRunner)
+    and stage_plan() share, so --dry-run reports done-ness from the
+    directory the real run will actually use."""
     if tiers != ("minhash",) or quality_cols:
         blob = json.dumps([sorted(tiers), list(quality_cols)]).encode()
         return "-" + hashlib.md5(blob).hexdigest()[:8]
@@ -422,7 +413,8 @@ def dedup(
         spark,
         cfg,
         force=force,
-        extra_key=_call_key(tiers, quality_cols),
+        tiers=tiers,
+        quality_cols=quality_cols,
         collect_metrics=metrics_sink is not None,
     )
 

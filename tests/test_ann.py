@@ -8,11 +8,11 @@ from pyspark.sql import functions as F
 
 from lasvdedup_spark.operators.ann import (
     ann_buckets_multi,
-    ann_capped_buckets,
     cosine_dup_pairs,
     knn_bruteforce,
     plane_tables,
 )
+from lasvdedup_spark.operators.pairs import capped_by_key
 
 DIM = 32
 
@@ -101,11 +101,11 @@ def test_bucket_ids_disjoint_across_tables(spark, planted):
 def test_capped_buckets_deterministic_and_bounded(spark, planted):
     tables = plane_tables(2, 2, DIM)  # tiny buckets -> guaranteed overflow
     b = ann_buckets_multi(planted, tables)
-    capped = ann_capped_buckets(b, 10)
+    capped = capped_by_key(b, "bucket", 10)
     sizes = capped.groupBy("bucket").count().agg(F.max("count")).collect()[0][0]
     assert sizes <= 10
     one = sorted(map(tuple, capped.collect()))
-    two = sorted(map(tuple, ann_capped_buckets(b.repartition(7), 10).collect()))
+    two = sorted(map(tuple, capped_by_key(b.repartition(7), "bucket", 10).collect()))
     assert one == two  # keep-lowest-ids rule is partitioning-independent
 
 

@@ -32,12 +32,28 @@ def _pairs(buckets, cfg):
 
 def test_salted_equals_plain(skewed_buckets):
     plain = _pairs(skewed_buckets, DedupConfig(salt_buckets=1))
-    # cutoff=16 forces the boilerplate buckets (size 120) onto the salted path
-    salted = _pairs(skewed_buckets, DedupConfig(salt_buckets=4, skew_bucket_cutoff=16))
-    assert plain == salted
+    # cutoff=16 forces the boilerplate buckets (size 120) onto the salted
+    # path; one salt must still return the full pair set
+    for s in (4, 1):
+        salted = _pairs(
+            skewed_buckets, DedupConfig(salt_buckets=s, skew_bucket_cutoff=16)
+        )
+        assert plain == salted, s
     # sanity: the mega-bucket really produced its full pair set
     boiler_pairs = {p for p in plain if p[0].startswith("u/b") and p[1].startswith("u/b")}
     assert len(boiler_pairs) == 120 * 119 // 2
+
+
+def test_salted_joins_reject_zero_salts(spark):
+    """salt_buckets=0 would reach pmod(..., 0) and sequence(0, -1) mid-job;
+    both salted joins must refuse it at plan-composition time."""
+    from lasvdedup_spark.operators.pairs import salted_cross_join, salted_pair_join
+
+    df = spark.createDataFrame([("a", 1), ("b", 1)], "id string, bucket long")
+    with pytest.raises(ValueError, match="salt_buckets"):
+        salted_pair_join(df, "bucket", 0, 16)
+    with pytest.raises(ValueError, match="salt_buckets"):
+        salted_cross_join(df, df, "bucket", 0, 16)
 
 
 def test_salt_splits_left_side(skewed_buckets):
@@ -226,7 +242,7 @@ def test_salted_cross_join_equals_plain_bipartite(spark):
     )
     plain = {
         (r["id_l"], r["id_r"])
-        for r in salted_cross_join(left, right, "bucket", 1, 10).collect()
+        for r in salted_cross_join(left, right, "bucket", 8, 1_000_000).collect()
     }
     salted_df = salted_cross_join(left, right, "bucket", 8, 10)
     salted = {(r["id_l"], r["id_r"]) for r in salted_df.collect()}
