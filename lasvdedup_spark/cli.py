@@ -166,6 +166,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from lasvdedup_spark.pipeline import dedup
     from lasvdedup_spark.session import get_spark
 
@@ -184,16 +187,18 @@ def main(argv: list[str] | None = None) -> int:
         spark, pages, cfg, tiers=tiers, quality_cols=quality_cols,
         force=args.force, embeddings=embeddings,
     )
+    # n_classified is observed on the output write, not re-read from it
+    obs = Observation()
+    rows = out.orderBy("url").observe(obs, F.count(F.lit(1)).alias("rows"))
     if args.partition_output:
         from lasvdedup_spark.sinks import write_classifications
 
-        write_classifications(out.orderBy("url"), path=args.output)
+        write_classifications(rows, path=args.output)
     else:
-        out.orderBy("url").write.mode("overwrite").parquet(args.output)
+        rows.write.mode("overwrite").parquet(args.output)
 
-    n = spark.read.parquet(args.output).count()
     summary = {
-        "n_classified": n,
+        "n_classified": obs.get["rows"],
         "seconds": round(time.time() - t0, 3),
         "output": args.output,
         "tiers": list(tiers),

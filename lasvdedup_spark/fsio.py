@@ -4,8 +4,9 @@ The pipeline's resume contract (StageRunner's _SUCCESS probe — the Spark
 analog of the reference's Snakemake skip-finished-outputs DAG,
 /root/reference/lasvdedup/pipeline.py:70-78) and the streaming index
 compaction both need a handful of driver-side metadata operations: exists,
-list, rename, delete. ``os.path`` only sees the LOCAL disk — on the design
-target (HDFS / S3 / an Iceberg warehouse) a local probe silently reports
+list, rename, delete, and reading a written stage's schema back.
+``os.path`` only sees the LOCAL disk — on the design target (HDFS / S3 /
+an Iceberg warehouse) a local probe silently reports
 "absent", which turns resume into recompute-everything and makes compaction
 impossible.
 
@@ -21,7 +22,14 @@ compaction crash-ordering relies on.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+# Footer key under which Spark's parquet writer stores the row schema
+# (ParquetReadSupport.SPARK_METADATA_KEY).
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -61,3 +69,35 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
 def mkdirs(spark: SparkSession, path: str) -> bool:
     fs, p = _fs_and_path(spark, path)
     return bool(fs.mkdirs(p))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """Spark row schema of a parquet directory, read on the driver from one
+    data file's footer; None when the directory holds no data file or the
+    file was not written by Spark.
+
+    ``spark.read.parquet`` infers the same schema with a distributed job;
+    passing this one to ``spark.read.schema`` skips it. Every file of a
+    stage directory comes from one write, so one footer speaks for all."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs, p = _fs_and_path(spark, path)
+    if not fs.exists(p):
+        return None
+    # Hadoop's hidden-file rule, as Spark's file index applies it
+    data = [
+        st.getPath() for st in fs.listStatus(p)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    ]
+    if not data:
+        return None
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(data[0], conf)
+    )
+    try:
+        blob = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(
+            _SPARK_ROW_METADATA
+        )
+    finally:
+        reader.close()
+    return None if blob is None else StructType.fromJson(json.loads(blob))

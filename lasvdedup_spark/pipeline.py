@@ -4,16 +4,22 @@ Mirrors the reference's Snakemake incremental DAG
 (/root/reference/lasvdedup/pipeline.py:70-78: skip rules whose outputs
 exist, --force to rerun) as a driver-side orchestration pattern:
 
-  * every stage writes parquet under <checkpoint_dir>/<config_fingerprint>/<stage>;
+  * every stage writes parquet under <checkpoint_dir>/<config_fingerprint>/<stage>,
+    and that write is the only job the stage adds: its row count is
+    observed on the write itself and the read-back reuses the written
+    schema, so nothing re-scans the stage;
   * a finished stage (parquet _SUCCESS present) is read back instead of
-    recomputed — resume after a crash costs only the unfinished stages;
+    recomputed — resume after a crash costs only the unfinished stages —
+    with the schema taken from one part file's footer, so a resumed stage
+    runs no job at all;
   * the fingerprint covers every semantics-affecting config field, so a
     changed config never reuses stale checkpoints (Snakemake gets this from
     file timestamps; we get it from content addressing, which also survives
     clock skew across a cluster);
-  * per-stage metrics rows (stage, rows, seconds, skipped) append to a
-    metrics parquet — the north rule's per-partition lineage + metrics
-    analog of the reference's elapsed-time logging
+  * per-stage metrics rows (stage, rows, seconds, skipped) and per-output-file
+    lineage rows append to the _metrics and _lineage parquets once per run,
+    also when a later stage fails — the north rule's per-partition lineage
+    + metrics analog of the reference's elapsed-time logging
     (determine_duplicates.py:107,149-150).
 
 On a real deployment the writes target Iceberg tables
@@ -30,9 +36,11 @@ import os
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from lasvdedup_spark import fsio
 from lasvdedup_spark.config import DedupConfig
 
 # Persisted-stage FORMAT version, folded into every checkpoint address.
@@ -67,6 +75,9 @@ class StageRunner:
         self.collect_metrics = collect_metrics
         self.root = checkpoint_root(cfg, tiers, quality_cols)
         self.metrics: list[dict] = []
+        # stage -> logged_at of each stage this runner wrote; write_metrics()
+        # logs their lineage in one go (a rewritten stage: its last write)
+        self._written: dict[str, float] = {}
 
     def _path(self, stage: str) -> str:
         assert self.root is not None
@@ -81,8 +92,6 @@ class StageRunner:
         # whatever filesystem Spark writes to (HDFS/S3 at scale); a local
         # probe there reports "absent" and resume silently recomputes
         # every stage (round-3 'What's missing' #1).
-        from lasvdedup_spark import fsio
-
         return fsio.exists(
             self.spark, os.path.join(self._path(stage), "_SUCCESS")
         )
@@ -109,7 +118,14 @@ class StageRunner:
         and each computes the full subtree (~2x the dominant map work;
         measured as two concurrent 96-task stages of equal duration in the
         scaling profile, BENCH.md round 3). Eager materialization runs the
-        subtree exactly once, and the sibling stages then read the cache."""
+        subtree exactly once, and the sibling stages then read the cache.
+
+        With a checkpoint_dir a computed stage costs exactly its parquet
+        write: the row count comes from an Observation on that write, and
+        the read-back passes the written schema, so no inference job or
+        count re-scans the stage. A finished stage is read back with the
+        schema from its footer and runs no job. Metrics and lineage rows
+        are buffered and written once per run by write_metrics()."""
         t0 = time.time()
         if self.root is None:
             df = fn()
@@ -135,54 +151,80 @@ class StageRunner:
                 }
             )
             return df
+        path = self._path(name)
         if self._done(name):
-            df = self.spark.read.parquet(self._path(name))
+            schema = fsio.parquet_schema(self.spark, path)
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            df = reader.parquet(path)
             self.metrics.append(
                 {"stage": name, "skipped": True, "seconds": time.time() - t0, "rows": -1, "lazy": False}
             )
             return df
         df = fn()
-        df.write.mode("overwrite").parquet(self._path(name))
-        out = self.spark.read.parquet(self._path(name))
-        rows = out.count()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+        # file sources read every field back as nullable, so the frame's
+        # schema is exactly what inference would find — without its job
+        out = self.spark.read.schema(df.schema).parquet(path)
         self.metrics.append(
-            {"stage": name, "skipped": False, "seconds": time.time() - t0, "rows": rows, "lazy": False}
+            {"stage": name, "skipped": False, "seconds": time.time() - t0, "rows": obs.get["rows"], "lazy": False}
         )
-        self._write_partition_lineage(name, out)
+        self._written[name] = time.time()
         return out
 
-    def _write_partition_lineage(self, stage: str, df: DataFrame) -> None:
+    def _lineage(self) -> DataFrame:
         """Per-partition lineage rows (north rule): per OUTPUT FILE row
-        counts of the persisted stage, keyed by stage + config fingerprint.
-        Each parquet file was written by exactly one producer task, so the
-        written files' row counts expose the PRODUCER's partition skew — a
-        stage whose max/mean file-row ratio blows up is the one to salt.
-        (spark_partition_id() over the re-read frame would instead reflect
-        the reader's ~128MB splits, hiding the writer's skew.)"""
-        pl = (
-            df.groupBy(F.input_file_name().alias("output_file"))
+        counts of every stage this runner wrote, keyed by stage + config
+        fingerprint. Each parquet file was written by exactly one producer
+        task, so the written files' row counts expose the PRODUCER's
+        partition skew — a stage whose max/mean file-row ratio blows up is
+        the one to salt. (spark_partition_id() over a re-read frame would
+        instead reflect the reader's ~128MB splits, hiding the writer's
+        skew.)
+
+        One scan over all the stage directories with an empty read schema
+        decodes no column; a part file's stage is its parent directory."""
+        files = self.spark.read.schema(StructType()).parquet(
+            *[self._path(stage) for stage in self._written]
+        )
+        logged_at = F.create_map(
+            *[F.lit(x) for kv in self._written.items() for x in kv]
+        )
+        stage = F.element_at(F.split("output_file", "/"), -2)
+        return (
+            files.groupBy(F.input_file_name().alias("output_file"))
             .count()
             .select(
-                F.lit(stage).alias("stage"),
+                stage.alias("stage"),
                 F.lit(self.cfg.fingerprint()).alias("config_fingerprint"),
                 "output_file",
                 F.col("count").alias("rows"),
-                F.lit(float(time.time())).alias("logged_at"),
+                logged_at[stage].alias("logged_at"),
             )
         )
-        pl.write.mode("append").parquet(os.path.join(self.root, "_lineage"))
 
     def write_metrics(self) -> None:
+        """Append the buffered per-stage rows to _metrics and the lineage
+        of every stage written so far to _lineage: two appends per run,
+        however many stages ran. The metrics rows are literals built on the
+        JVM, so no Python worker is involved."""
         if self.root is None:
             return
-        mdf = self.spark.createDataFrame(
-            [
-                (m["stage"], bool(m["skipped"]), float(m["seconds"]), int(m["rows"]), time.time())
+        if self.metrics:
+            rows = [
+                F.struct(
+                    F.lit(m["stage"]).alias("stage"),
+                    F.lit(bool(m["skipped"])).alias("skipped"),
+                    F.lit(float(m["seconds"])).alias("seconds"),
+                    F.lit(int(m["rows"])).cast("long").alias("rows"),
+                    F.lit(time.time()).alias("logged_at"),
+                )
                 for m in self.metrics
-            ],
-            "stage string, skipped boolean, seconds double, rows long, logged_at double",
-        )
-        mdf.write.mode("append").parquet(os.path.join(self.root, "_metrics"))
+            ]
+            metrics = self.spark.range(1).select(F.inline(F.array(*rows)))
+            metrics.write.mode("append").parquet(os.path.join(self.root, "_metrics"))
+        if self._written:
+            self._lineage().write.mode("append").parquet(os.path.join(self.root, "_lineage"))
 
 
 def validate_pages_schema(
@@ -290,8 +332,6 @@ def stage_plan(
 
     def _probe(p: str) -> bool:
         if spark is not None:
-            from lasvdedup_spark import fsio
-
             return fsio.exists(spark, p)
         return os.path.exists(p)
 
@@ -399,9 +439,6 @@ def dedup(
     jaccard_threshold. Candidate verification runs at the floor (min) of
     all thresholds so lower-than-global languages lose no pairs.
     """
-    from lasvdedup_spark.operators import classify as C
-    from lasvdedup_spark.operators import components, exact, minhash, simhash, substring
-
     cfg = cfg or DedupConfig()
     validate_tiers(tiers)
     lang_cols = ("lang",) if cfg.lang_thresholds else ()
@@ -417,6 +454,38 @@ def dedup(
         quality_cols=quality_cols,
         collect_metrics=metrics_sink is not None,
     )
+    try:
+        out = _stages(
+            r, pages, cfg, tiers, quality_cols, lang_cols,
+            embeddings, embedding_id_col, embedding_vec_col,
+        )
+    finally:
+        # a failed stage must not lose the metrics and lineage of the
+        # stages that finished before it
+        r.write_metrics()
+    if metrics_sink is not None:
+        # checkpoint-less metrics channel (the north rule's metrics story
+        # must not require a checkpoint_dir): real seconds/rows for every
+        # eagerly-materialized stage, lazy=True markers for the rest
+        metrics_sink.extend(r.metrics)
+    return out
+
+
+def _stages(
+    r: StageRunner,
+    pages: DataFrame,
+    cfg: DedupConfig,
+    tiers: tuple[str, ...],
+    quality_cols: tuple[str, ...],
+    lang_cols: tuple[str, ...],
+    embeddings: DataFrame | None,
+    embedding_id_col: str,
+    embedding_vec_col: str,
+) -> DataFrame:
+    """dedup()'s stage sequence on runner ``r``; returns the
+    classifications frame."""
+    from lasvdedup_spark.operators import classify as C
+    from lasvdedup_spark.operators import components, exact, minhash, simhash, substring
 
     if r.root is not None and not cfg.checkpoint_narrow_text:
         # Lean narrow checkpoint (cfg.checkpoint_narrow_text=False): persist
@@ -661,11 +730,4 @@ def dedup(
         # ordering DataFrames don't guarantee across transformations anyway.
         return df.orderBy("url") if r.root is not None else df
 
-    out = r.stage("classifications", _classifications)
-    r.write_metrics()
-    if metrics_sink is not None:
-        # checkpoint-less metrics channel (the north rule's metrics story
-        # must not require a checkpoint_dir): real seconds/rows for every
-        # eagerly-materialized stage, lazy=True markers for the rest
-        metrics_sink.extend(r.metrics)
-    return out
+    return r.stage("classifications", _classifications)

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
@@ -346,8 +346,11 @@ def compact_index(spark: SparkSession, work_dir: str) -> dict:
     out = idx.select(*cols).dropDuplicates(["id", "bucket"])
     if "part" not in out.columns:  # legacy un-partitioned layout: add it
         out = _with_part(out)
+    # the row count is observed on the write, not re-read from tmp
+    obs = Observation()
+    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
     out.write.mode("overwrite").partitionBy("part").parquet(tmp)
-    rows = spark.read.parquet(tmp).count()
+    rows = obs.get["rows"]
 
     fsio.rename(spark, tmp, os.path.join(index_dir, f"batch_id={new_id}"))
     for d in all_dirs:
