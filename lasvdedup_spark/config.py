@@ -174,16 +174,6 @@ class DedupConfig:
 
     # --- checkpointing ---
     checkpoint_dir: Optional[str] = None   # None = no stage checkpoints
-    # Persist the full text column into the 'narrow' stage checkpoint?
-    # Default False: with checkpointing on, stage 1 of a 100 TB run would
-    # otherwise write a near-full second copy of the corpus before any real
-    # work. False persists only (url, n_chars, quality, lang) — the columns
-    # downstream stats/lang-refinement read — and text-consuming stages
-    # recompute their projection from the INPUT table on resume (the resume
-    # contract already assumes the input is unchanged; the fingerprint
-    # covers config, not data). True restores the self-contained checkpoint
-    # for deployments where re-reading the input is the expensive side.
-    checkpoint_narrow_text: bool = False
 
     def __post_init__(self) -> None:
         if self.lsh_bands * self.lsh_rows != self.num_perms:

@@ -34,11 +34,6 @@ def portable_hash28_sql(expr: str) -> str:
     return f"cast(conv(substr(md5({expr}),1,7),16,10) as bigint)"
 
 
-def fast_hash64(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c)
-
-
 def shingle_hash_sql(cfg: DedupConfig, expr: str) -> str:
     """Hash fragment applied to each shingle string (inside transform())."""
     if cfg.hash_family == "md5":
@@ -48,20 +43,8 @@ def shingle_hash_sql(cfg: DedupConfig, expr: str) -> str:
     return f"pmod(xxhash64({expr}), 268435456)"
 
 
-def shingle_hashes_expr(cfg: DedupConfig, shingles_col: str = "shingles") -> Column:
-    """Hash every shingle ONCE: array<string> -> array<bigint> (28-bit).
-
-    Factoring this out of the permutation loop matters enormously: computing
-    the hash inside minhash_sig_expr would evaluate md5 per (permutation,
-    shingle) — num_perms× redundant work; md5 dominates the signature cost.
-    Measured at sf0.1: 64-perm signatures went ~8× faster after hashing once.
-    """
-    h = shingle_hash_sql(cfg, "s")
-    return F.expr(f"transform({shingles_col}, s -> {h})")
-
-
 def minhash_sig_expr(cfg: DedupConfig, shingles_col: str = "shingles") -> Column:
-    """MinHash signature as array<bigint>, fully JVM-side.
+    """MinHash signature as array<int>, fully JVM-side.
 
     sig[j] = min over shingles s of (a_j * h28(s) + b_j) mod P — computed as
     a single fold:
@@ -87,19 +70,8 @@ def minhash_sig_expr(cfg: DedupConfig, shingles_col: str = "shingles") -> Column
     "vectorized native compute" — Catalyst higher-order functions inside
     whole-stage codegen, no Python worker hop at all.
     """
-    perms = ", ".join(f"struct({a}L as a, {b}L as b)" for a, b in cfg.permutations)
     h = shingle_hash_sql(cfg, "s")
-    # finish lambda narrows to array<int>: every value is < 2^31-1 (pmod by
-    # the Mersenne prime), and signatures are the widest column shuffled by
-    # the verify join — int32 halves that shuffle's bytes at zero cost.
-    return F.expr(
-        f"aggregate("
-        f"  transform({shingles_col}, s -> {h}), "
-        f"  array_repeat({MINHASH_PRIME}L, {cfg.num_perms}), "
-        f"  (acc, h) -> zip_with(acc, array({perms}), "
-        f"    (m, p) -> least(m, pmod(p.a * h + p.b, {MINHASH_PRIME}))), "
-        f"  acc -> transform(acc, x -> cast(x as int)))"
-    )
+    return minhash_sig_from_hashes_expr(cfg, f"transform({shingles_col}, s -> {h})")
 
 
 # NOTE on an optimization that BACKFIRED (kept as a warning): replacing
@@ -194,9 +166,14 @@ def fast_lgram_hashes_expr(length: int, tokens_col: str = "tokens") -> Column:
 def minhash_sig_from_hashes_expr(
     cfg: DedupConfig, hashes_col: str = "sh_hashes"
 ) -> Column:
-    """Signature fold over an already-hashed shingle column (array<bigint>).
-    Same fold as minhash_sig_expr, minus the hashing step."""
+    """Signature fold over already-hashed shingles: ``hashes_col`` is an
+    array<bigint> column or SQL expression. minhash_sig_expr passes its
+    hashing transform() here, so it stays the aggregate's input (evaluated
+    once per row; see minhash_sig_expr)."""
     perms = ", ".join(f"struct({a}L as a, {b}L as b)" for a, b in cfg.permutations)
+    # finish lambda narrows to array<int>: every value is < 2^31-1 (pmod by
+    # the Mersenne prime), and signatures are the widest column shuffled by
+    # the verify join — int32 halves that shuffle's bytes at zero cost.
     return F.expr(
         f"aggregate({hashes_col}, "
         f"  array_repeat({MINHASH_PRIME}L, {cfg.num_perms}), "
@@ -244,10 +221,3 @@ def sig_jaccard_expr(a: str = "sig_a", b: str = "sig_b") -> Column:
         f"0, (acc, v) -> acc + v) / size({a})"
     ).cast("double")
 
-
-def set_jaccard_expr(a: str, b: str) -> Column:
-    """Exact Jaccard of two array columns (distinct elements assumed)."""
-    return (
-        F.size(F.array_intersect(F.col(a), F.col(b)))
-        / F.size(F.array_union(F.col(a), F.col(b)))
-    ).cast("double")

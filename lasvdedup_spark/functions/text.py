@@ -23,25 +23,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-# The deterministic HTML template used by the synthetic pages table.
-# Keep in sync between synth.py (builder) and the extractors below.
-HTML_PREFIX = "<html><head><title>d</title></head><body><p>"
+# The deterministic HTML template used by the synthetic pages table
+# (sources/pages.py::pages_from_documents builds it; the extractors below
+# parse it).
 HTML_SUFFIX = "</p></body></html>"
 _EXTRACT_RE = r"<body><p>(.*)</p></body>"
-
-
-def wrap_html_expr(text_col: str, title_col: str) -> Column:
-    """Build the synthetic html binary column from text (deterministic)."""
-    return F.encode(
-        F.concat(
-            F.lit("<html><head><title>"),
-            F.col(title_col),
-            F.lit("</title></head><body><p>"),
-            F.col(text_col),
-            F.lit(HTML_SUFFIX),
-        ),
-        "UTF-8",
-    )
 
 
 def extract_text_udf():

@@ -193,23 +193,19 @@ def shingle_sets(
 def containment_dup_pairs(
     pages: DataFrame,
     cfg: DedupConfig,
+    sigs: DataFrame,
+    bands: DataFrame,
     id_col: str = "url",
-    sigs: DataFrame | None = None,
-    bands: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end containment tier: pages -> subset-duplicate edges
     (id_a, id_b, containment_a, containment_b). LSH banding generates the
-    candidates (same signatures/bands the minhash tier uses — pass them in
-    when a pipeline already checkpointed them), then the asymmetric
-    containment verify keeps pairs where EITHER direction >=
+    candidates from the signatures/bands the minhash tier already built
+    (``bands`` = capped_buckets(band_buckets(sigs, cfg), cfg)), then the
+    asymmetric containment verify keeps pairs where EITHER direction >=
     cfg.containment_threshold. Catches a doc quoted wholesale inside a
     longer one, which symmetric Jaccard scores at only |A|/|B| (reference
     cascade-analog: the staged-filter ordering of
     /root/reference/lasvdedup/utils/sequence_grouping.py:209-254)."""
-    if sigs is None:
-        sigs = signatures(pages, cfg, id_col)
-    if bands is None:
-        bands = capped_buckets(band_buckets(sigs, cfg), cfg)
     cand = candidate_pairs(bands, cfg)
     return containment_pairs(
         cand, shingle_sets(pages, cfg, id_col), cfg.containment_threshold
@@ -220,15 +216,13 @@ def minhash_dup_pairs(
     pages: DataFrame,
     cfg: DedupConfig,
     id_col: str = "url",
-    sigs: DataFrame | None = None,
     eager: bool = False,
 ) -> DataFrame:
     """End-to-end: pages -> verified duplicate edges (id_a, id_b, jaccard).
 
-    Pass precomputed ``sigs`` when they are materialized elsewhere (the
-    staged pipeline checkpoints them): signatures feed BOTH the band side
-    and the verify side, and Spark has no cross-subtree common-subexpression
-    reuse — an un-materialized sigs subtree executes twice per action.
+    Signatures feed BOTH the band side and the verify side, and Spark has
+    no cross-subtree common-subexpression reuse — an un-materialized sigs
+    subtree executes twice per action.
 
     eager=True materializes the signatures NOW (localCheckpoint): the band
     side and both verify joins are SIBLING stages of the same downstream
@@ -238,10 +232,9 @@ def minhash_dup_pairs(
     operator lazy — no Spark job at plan-composition time, so it composes
     onto streaming DataFrames and pure-plan callers; batch callers on hot
     paths (bench) opt in."""
-    if sigs is None:
-        sigs = signatures(pages, cfg, id_col)
-        if eager:
-            sigs = sigs.localCheckpoint(eager=True)
+    sigs = signatures(pages, cfg, id_col)
+    if eager:
+        sigs = sigs.localCheckpoint(eager=True)
     bkts = capped_buckets(band_buckets(sigs, cfg), cfg)
     cand = candidate_pairs(bkts, cfg)
     return verified_pairs(cand, sigs, cfg)

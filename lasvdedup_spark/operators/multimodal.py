@@ -4,11 +4,10 @@ The input table carries ``html:binary`` (BASELINE.json input_hint); a
 training-data pipeline additionally carries image/audio/video payloads as
 opaque binary columns. This module provides the Spark-side plumbing for
 those columns — schema, content sniffing, partitioning, Arrow batch shape —
-with the actual media decode STUBBED (no image/audio libraries exist in this
-container): ``decode_media`` computes deterministic fake features derived
-from the bytes, and raises ``NotImplementedError`` when a real decode is
-requested. Everything around the stub (column pruning, mapInPandas batch
-iteration, typed struct output) is real and tested.
+with the actual media decode STUBBED (no image/audio library is a
+dependency): ``decode_media`` computes deterministic fake features derived
+from the bytes. Everything around the stub (column pruning, mapInPandas
+batch iteration, typed struct output) is real and tested.
 
 Reference analog: the reference treats sequences as opaque payloads written
 back out per classification (/root/reference/lasvdedup/utils/io_utils.py:111-144);
@@ -85,24 +84,15 @@ def decode_media(
     pages: DataFrame,
     bin_col: str = "html",
     id_col: str = "url",
-    real_decode: bool = False,
 ) -> DataFrame:
     """mapInPandas decode/feature-extract over a binary column.
 
     Output: (url, content_type, n_bytes, width, height, feature0, feature1).
     The Python worker receives Arrow record batches (binary column included)
     and yields narrow metadata batches — the blob never leaves the worker.
-
-    real_decode=True is the production switch for actual media libraries;
-    it raises NotImplementedError here (STUB — container has no codecs).
+    Dims and features come from _fake_decode, the single boundary where a
+    real image/audio codec would plug in.
     """
-    if real_decode:
-        raise NotImplementedError(
-            "real media decode requires image/audio codecs not present in "
-            "this container; the deterministic fake (real_decode=False) "
-            "exercises the full Spark-side plumbing"
-        )
-
     magic_to_type = dict(MAGIC_TYPES)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -8,15 +8,13 @@ simhash(doc): bit j is 1 iff sum over distinct tokens t of
 — computed as the equivalent per-INSTANCE sum (each occurrence contributes
 its ±1, which totals w(t) * ±1), so no term-frequency grouping is needed.
 
-Token hashing is a JVM expression; the 60-counter fold has two
-bit-identical implementations (exact integer counting, order-independent):
-the default pure-SQL aggregate-fold (zero Python in the plan) and a
-vectorized numpy kernel behind a pandas UDF for dense cluster-scale
-partitions (see simhash() for the measured trade). Zero shuffle either
-way (the earlier explode -> groupBy(id, token) formulation shuffled one
-row per token instance — measured 5x slower at sf0.1 locally, and
-unboundedly worse at cluster scale); the whole operator stays a pure
-projection, so it composes onto streaming DataFrames.
+Token hashing and the 60-counter fold are one pure-SQL aggregate
+expression (exact integer counting, order-independent; zero Python in the
+plan). Zero shuffle (the earlier explode -> groupBy(id, token)
+formulation shuffled one row per token instance — measured 5x slower at
+sf0.1 locally, and unboundedly worse at cluster scale); the whole
+operator stays a pure projection, so it composes onto streaming
+DataFrames.
 
 Pairing uses the pigeonhole banding trick: split 60 bits into 4 x 15-bit
 bands; any pair with hamming distance <= 3 must agree on at least one full
@@ -37,66 +35,12 @@ N_BANDS = 4          # guarantees recall for hamming <= 3
 BAND_BITS = 15
 
 
-def _simhash_fold_udf():
-    """Vectorized Arrow fold: array<token-hash> -> simhash bigint.
-
-    The per-row math is EXACT integer counting (bit j set iff
-    2 * count(tokens with bit j) > n_tokens — identically the sign of the
-    ±1 counter sum), so the result is bit-identical to the SQL fold on
-    either hash family; tests pin arrow == sql on both.
-
-    Long docs fold in 8k-token slices so the transient n x 60 bit matrix
-    stays ~4 MB regardless of document length (Arrow batches bound the
-    per-task footprint the same way the substring kernel does).
-
-    numpy/pandas import HERE, not at module top: the default zero-Python
-    SQL fold must stay importable on a driver without them installed
-    (they are only an executor-side need, and only for impl='arrow').
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # pandas_udf resolves the string annotations below ('pd.Series', a
-    # string under `from __future__ import annotations`) against the
-    # function's module globals — publish the lazy imports there or the
-    # signature inspection raises UNSUPPORTED_SIGNATURE.
-    globals().setdefault("np", np)
-    globals().setdefault("pd", pd)
-
-    @pandas_udf("long")
-    def fold(th: pd.Series) -> pd.Series:
-        shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
-        lanes = np.uint64(1) << shifts
-        out = []
-        for arr in th:
-            if arr is None:
-                out.append(None)
-                continue
-            h = np.asarray(arr, dtype=np.uint64)
-            n = len(h)
-            if n == 0:
-                out.append(0)
-                continue
-            bits = np.zeros(SIMHASH_BITS, dtype=np.int64)
-            for s in range(0, n, 8192):
-                seg = h[s : s + 8192]
-                bits += ((seg[:, None] >> shifts) & np.uint64(1)).sum(
-                    axis=0, dtype=np.int64
-                )
-            out.append(int(lanes[2 * bits > n].sum()))
-        return pd.Series(out, dtype="Int64")
-
-    return fold
-
-
 def simhash(
     pages: DataFrame,
     id_col: str = "url",
     hash_family: str = "md5",
-    impl: str = "sql",
 ) -> DataFrame:
-    """(id, simhash: bigint) — token hashes JVM-side, fold vectorized.
+    """(id, simhash: bigint) — token hashes and counter fold JVM-side.
 
     hash_family picks the per-token 60-bit hash:
       * "md5" (default) — portable to the DuckDB oracle byte-for-byte; the
@@ -108,23 +52,9 @@ def simhash(
         to the same non-negative 60-bit range so banding/Hamming code is
         family-agnostic. Different bits than md5, same near-dup semantics.
 
-    impl picks how the counter fold runs; both produce IDENTICAL values
-    (exact integer math, order-independent; pinned by
-    test_simhash_arrow_fold_equals_sql_fold):
-      * "sql" (default) — the pure-expression fold: zero Python in the
-        plan, no worker cold-start, composes into any pipeline. Spark
-        evaluates higher-order-function lambdas interpreted
-        (CodegenFallback) at ~60 lambda evals + one 60-long array
-        allocation per token instance, so its per-token CPU is ~5x the
-        numpy kernel's — but at bench granularity (5919 docs / 96
-        partitions) task fixed costs dominate and it is the faster path.
-      * "arrow" — token hashing stays a JVM expression; the 60-counter
-        fold is a vectorized numpy kernel behind a pandas UDF (Arrow
-        batches, 8k-token slices bound memory). Wins when partitions are
-        DENSE — cluster-scale splits where each task folds millions of
-        tokens and the ~5x per-token CPU gap dwarfs the per-task Python
-        round-trip; loses on sparse local partitions (32-worker
-        cold-start measured ~9 s, and ~50 ms/task fixed thereafter).
+    Spark evaluates the fold's higher-order-function lambdas interpreted
+    (CodegenFallback): ~60 lambda evals + one 60-long array allocation per
+    token instance.
     """
     if hash_family == "xxhash64":
         h = f"pmod(xxhash64(t), {1 << SIMHASH_BITS}L)"
@@ -134,13 +64,6 @@ def simhash(
     base = pages.select(
         F.col(id_col).alias("id"), tokens_expr("text").alias("tokens")
     )
-    if impl == "arrow":
-        fold_udf = _simhash_fold_udf()
-        return base.select(
-            "id", fold_udf(F.expr(f"transform(tokens, t -> {h})")).alias("simhash")
-        )
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     fold = (
         f"aggregate("
         f"  transform(tokens, t -> {h}), "

@@ -12,10 +12,6 @@ actual longest common token span (sorted-suffix scan), for reporting and
 threshold tuning. That is the engine's only UDTF-shaped operator (SURVEY
 §2.9), replacing the reference's external alignment tools as the "expensive
 verification kernel".
-
-Scale path: ``sample_mod`` keeps only L-grams whose hash = 0 (mod s) on BOTH
-sides — classic winnowing-style sampling; recall trades off explicitly and
-the sampling rate is part of the config fingerprint. Default 1 = exact.
 """
 
 from __future__ import annotations
@@ -29,8 +25,7 @@ from lasvdedup_spark.functions.hashing import fast_lgram_hashes_expr, portable_h
 from lasvdedup_spark.functions.text import lgrams_expr, tokens_expr
 
 
-def lgram_hashes(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
-                 sample_mod: int = 1) -> DataFrame:
+def lgram_hashes(pages: DataFrame, cfg: DedupConfig, id_col: str = "url") -> DataFrame:
     """(id, gh) — one row per distinct L-gram hash per doc.
 
     Hash family follows cfg.hash_family:
@@ -50,25 +45,20 @@ def lgram_hashes(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
         F.col(id_col).alias("id"), tokens_expr("text").alias("tokens")
     )
     if cfg.hash_family == "xxhash64":
-        g = base.select(
+        return base.select(
             "id",
             F.explode(
                 fast_lgram_hashes_expr(cfg.substring_min_tokens)
             ).alias("gh"),
         )
-    else:
-        g = (
-            base.withColumn("lgrams", lgrams_expr(cfg.substring_min_tokens))
-            .select("id", F.explode("lgrams").alias("lgram"))
-            .select("id", portable_hash60("lgram").alias("gh"))
-        )
-    if sample_mod > 1:
-        g = g.where(F.pmod(F.col("gh"), F.lit(sample_mod)) == 0)
-    return g
+    return (
+        base.withColumn("lgrams", lgrams_expr(cfg.substring_min_tokens))
+        .select("id", F.explode("lgrams").alias("lgram"))
+        .select("id", portable_hash60("lgram").alias("gh"))
+    )
 
 
-def substring_dup_pairs(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
-                        sample_mod: int = 1) -> DataFrame:
+def substring_dup_pairs(pages: DataFrame, cfg: DedupConfig, id_col: str = "url") -> DataFrame:
     """(id_a, id_b, n_shared_grams) for docs sharing >= 1 L-gram.
 
     Same join shape — and the same boilerplate-gram skew hazard — as the
@@ -77,7 +67,7 @@ def substring_dup_pairs(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
     the identical salted_pair_join machinery."""
     from lasvdedup_spark.operators.pairs import salted_pair_join
 
-    g = lgram_hashes(pages, cfg, id_col, sample_mod)
+    g = lgram_hashes(pages, cfg, id_col)
     return salted_pair_join(
         g,
         "gh",

@@ -487,35 +487,21 @@ def _stages(
     from lasvdedup_spark.operators import classify as C
     from lasvdedup_spark.operators import components, exact, minhash, simhash, substring
 
-    if r.root is not None and not cfg.checkpoint_narrow_text:
-        # Lean narrow checkpoint (cfg.checkpoint_narrow_text=False): persist
-        # only the metadata columns downstream stats / lang-refinement read.
-        # The text-consuming tiers project straight off the INPUT table —
-        # lazily, so column pruning still reaches the source scan — instead
-        # of a checkpoint that would be a near-full copy of a 100 TB corpus
-        # written before any real work. On resume, stages whose checkpoints
-        # exist never touch text anyway; unfinished ones recompute from the
-        # input (the resume contract already assumes it is unchanged).
-        meta = r.stage(
-            "narrow",
-            lambda: pages.select(
-                "url", F.length("text").alias("n_chars"),
-                *quality_cols, *lang_cols,
-            ),
-        )
-        narrow = pages.select(
-            "url", "text", F.length("text").alias("n_chars"),
-            *quality_cols, *lang_cols,
-        )
-    else:
-        narrow = r.stage(
-            "narrow",
-            lambda: pages.select(
-                "url", "text", F.length("text").alias("n_chars"),
-                *quality_cols, *lang_cols,
-            ),
-        )
-        meta = narrow
+    # Under a checkpoint_dir the 'narrow' stage persists only the metadata
+    # columns downstream stats / lang-refinement read. The text-consuming
+    # tiers project straight off the INPUT table — lazily, so column pruning
+    # still reaches the source scan — instead of a checkpoint that would be
+    # a near-full copy of a 100 TB corpus written before any real work. On
+    # resume, stages whose checkpoints exist never touch text anyway;
+    # unfinished ones recompute from the input (the resume contract already
+    # assumes it is unchanged). Without one, the stage passes narrow through.
+    narrow = pages.select(
+        "url", "text", F.length("text").alias("n_chars"),
+        *quality_cols, *lang_cols,
+    )
+    meta = r.stage(
+        "narrow", lambda: narrow if r.root is None else narrow.drop("text")
+    )
 
     if cfg.lang_thresholds:
         # verify at the floor; the per-lang refinement filter runs on the
@@ -601,9 +587,7 @@ def _stages(
         # cosine, it rides the shared 'jaccard' edge column
         e = r.stage(
             "edges_containment",
-            lambda: minhash.containment_dup_pairs(
-                narrow, cfg, sigs=sigs, bands=bands
-            ).select(
+            lambda: minhash.containment_dup_pairs(narrow, cfg, sigs, bands).select(
                 "id_a",
                 "id_b",
                 F.greatest("containment_a", "containment_b").alias("jaccard"),

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lasvdedup_spark.functions.hashing import portable_hash60
-from lasvdedup_spark.functions.text import HTML_SUFFIX  # noqa: F401 (template doc)
+from lasvdedup_spark.functions.text import HTML_SUFFIX
 
 # Epoch of 2024-01-01T00:00:00 UTC; warc_ts spreads over the following year.
 _WARC_EPOCH = 1_704_067_200

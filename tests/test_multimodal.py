@@ -51,11 +51,6 @@ def test_decode_media_schema_and_determinism(media):
     assert 0.0 <= by_url["u/0"][5] <= 1.0
 
 
-def test_decode_media_real_decode_is_stubbed(media):
-    with pytest.raises(NotImplementedError):
-        decode_media(media, real_decode=True)
-
-
 def test_frame_sample_plan(media):
     plan = frame_sample_plan(media, n_frames=4)
     rows = plan.where(F.col("url") == "u/0").orderBy("frame_idx").collect()

@@ -230,11 +230,10 @@ def test_lang_thresholds_affect_fingerprint():
 
 def test_narrow_checkpoint_text_policy(spark, tmp_path):
     """VERDICT r4 #5: with checkpointing on, stage 1 must NOT write a
-    near-full copy of the corpus. Default (checkpoint_narrow_text=False):
-    the persisted 'narrow' stage carries only metadata columns — no text —
-    and both full and partial resumes reproduce the identical output by
-    recomputing text-derived stages from the input.
-    checkpoint_narrow_text=True restores the self-contained checkpoint."""
+    near-full copy of the corpus: the persisted 'narrow' stage carries
+    only metadata columns — no text — and both full and partial resumes
+    reproduce the identical output by recomputing text-derived stages from
+    the input."""
     import shutil
 
     from lasvdedup_spark.pipeline import checkpoint_root, dedup
@@ -266,17 +265,6 @@ def test_narrow_checkpoint_text_policy(spark, tmp_path):
     out3 = {(r["url"], r["component"], r["classification"])
             for r in dedup(spark, pages, cfg).collect()}
     assert out3 == out1
-
-    # opt-in self-contained checkpoint keeps text (separate address: the
-    # policy is part of the fingerprint, so the two layouts never mix)
-    cfg_full = cfg.with_overrides(checkpoint_narrow_text=True)
-    out4 = {(r["url"], r["component"], r["classification"])
-            for r in dedup(spark, pages, cfg_full).collect()}
-    assert out4 == out1
-    narrow_full = spark.read.parquet(
-        os.path.join(checkpoint_root(cfg_full), "narrow")
-    )
-    assert "text" in narrow_full.columns
 
 
 def test_metrics_without_checkpointing(spark):

@@ -7,7 +7,6 @@ from lasvdedup_spark.config import DedupConfig
 from lasvdedup_spark.functions.text import extract_text_sql, extract_text_udf
 from lasvdedup_spark.operators.simhash import simhash, simhash_dup_pairs
 from lasvdedup_spark.operators.substring import (
-    lgram_hashes,
     span_lengths,
     substring_dup_pairs,
 )
@@ -196,16 +195,6 @@ def test_extract_text_byte_identical(spark, docs):
     assert ext.count() == docs.count()
 
 
-def test_lgram_sampling_subset(spark, docs):
-    cfg = DedupConfig()
-    full = lgram_hashes(docs.limit(100), cfg, "doc_id", sample_mod=1)
-    samp = lgram_hashes(docs.limit(100), cfg, "doc_id", sample_mod=4)
-    n_full, n_samp = full.count(), samp.count()
-    assert 0 < n_samp < n_full
-    # sampled grams are a subset of full grams
-    assert samp.exceptAll(full).count() == 0
-
-
 def test_extract_text_real_world_html(spark):
     """Beyond the synthetic template: nested tags, entities, script/style
     blocks, comments, and broken markup must extract non-empty,
@@ -265,10 +254,15 @@ def test_extract_text_template_path_unchanged(spark, docs):
     assert bad == 0
 
 
-def test_simhash_arrow_fold_equals_sql_fold(spark):
-    """The vectorized Arrow fold and the pure-SQL fold must produce
-    bit-identical simhash values on BOTH hash families, including empty,
-    null, single-token, and very long documents."""
+def test_simhash_fold_matches_exact_count_reference(spark):
+    """The SQL counter fold must equal the exact-count rule computed in
+    plain Python from the same token hashes: bit j is set iff
+    2 * count(hashes with bit j) > n_tokens; NULL text gives NULL and an
+    empty hash array gives 0. Both hash families, on empty, null,
+    single-token, repeated-token, very long and unicode documents."""
+    from lasvdedup_spark.functions.text import tokens_expr
+    from lasvdedup_spark.operators.simhash import SIMHASH_BITS
+
     rows = [
         ("empty", ""),
         ("null", None),
@@ -278,12 +272,33 @@ def test_simhash_arrow_fold_equals_sql_fold(spark):
         ("uni", "pagé ☃ tëst wörds"),
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    for fam in ("md5", "xxhash64"):
-        a = {r["id"]: r["simhash"]
-             for r in simhash(docs, "doc_id", hash_family=fam, impl="arrow").collect()}
-        s = {r["id"]: r["simhash"]
-             for r in simhash(docs, "doc_id", hash_family=fam, impl="sql").collect()}
-        assert a == s, fam
+    token_hash = {
+        "md5": "cast(conv(substr(md5(t),1,15),16,10) as bigint)",
+        "xxhash64": f"pmod(xxhash64(t), {1 << SIMHASH_BITS}L)",
+    }
+
+    def reference(hashes):
+        if hashes is None:
+            return None
+        n = len(hashes)
+        return sum(
+            1 << j for j in range(SIMHASH_BITS)
+            if 2 * sum((h >> j) & 1 for h in hashes) > n
+        )
+
+    assert reference([]) == 0
+    tokens = docs.select("doc_id", tokens_expr("text").alias("tokens"))
+    for fam, h in token_hash.items():
+        want = {
+            r["doc_id"]: reference(r["th"])
+            for r in tokens.select(
+                "doc_id", F.expr(f"transform(tokens, t -> {h})").alias("th")
+            ).collect()
+        }
+        got = {r["id"]: r["simhash"]
+               for r in simhash(docs, "doc_id", hash_family=fam).collect()}
+        assert got == want, fam
+    assert want["null"] is None and want["long"] != 0
 
 
 def test_containment_catches_subset_dup_jaccard_misses(spark):
