@@ -21,8 +21,8 @@ collision-prone id hashing, no GraphFrames dependency.
 Driver-side loop with localCheckpoint() per round to truncate lineage
 (otherwise the plan doubles each round and Catalyst analysis time explodes);
 convergence is read off each round directly — the edge set is a fixpoint
-iff it is a star forest (no node appears as both src and dst), so no
-confirmation round is ever computed.
+iff it is a star forest (no node appears as both src and dst, and no src
+has two dsts), so no confirmation round is ever computed.
 """
 
 from __future__ import annotations
@@ -65,13 +65,15 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def _star_violations(edges: DataFrame) -> int:
-    """Number of nodes appearing as BOTH a src and a dst — zero iff the
-    edge set is a star forest rooted at component minima, which is exactly
-    the alternating large/small-star fixpoint (every small-star output
-    edge already has dst < src, and large_star/small_star are the identity
-    on a star forest). Run against a LAZY localCheckpoint, this one action
-    both materializes the round (truncating lineage) and returns the
-    convergence signature.
+    """Number of nodes that break the star-forest shape: a node appearing
+    as BOTH a src and a dst, or a src with two different dsts (it points
+    at two roots, so its two stars are one component not yet merged).
+    Zero iff the edge set is a star forest rooted at component minima,
+    which is exactly the alternating large/small-star fixpoint (every
+    small-star output edge already has dst < src, and large_star/
+    small_star are the identity on a star forest). Run against a LAZY
+    localCheckpoint, this one action both materializes the round
+    (truncating lineage) and returns the convergence signature.
 
     Versus the previous (count, xor-hash)-equality check: checksum
     equality can only observe convergence by computing round N+1 and
@@ -81,16 +83,33 @@ def _star_violations(edges: DataFrame) -> int:
     map-side-combinable groupBy over the round's edges; rounds drop by
     exactly one at every scale."""
     nodes = edges.select(
-        F.col("src").alias("n"), F.lit(1).alias("s"), F.lit(0).alias("d")
+        F.col("src").alias("n"),
+        F.lit(1).alias("s"),
+        F.lit(0).alias("d"),
+        F.col("dst").alias("t"),
     ).unionAll(
-        edges.select(F.col("dst").alias("n"), F.lit(0).alias("s"), F.lit(1).alias("d"))
+        edges.select(
+            F.col("dst").alias("n"),
+            F.lit(0).alias("s"),
+            F.lit(1).alias("d"),
+            F.lit(None).cast("string").alias("t"),
+        )
     )
-    row = (
-        nodes.groupBy("n")
-        .agg(F.max("s").alias("s"), F.max("d").alias("d"))
-        .agg(F.count(F.when((F.col("s") == 1) & (F.col("d") == 1), 1)).alias("v"))
-        .collect()[0]
+    per_node = nodes.groupBy("n").agg(
+        F.max("s").alias("s"),
+        F.max("d").alias("d"),
+        F.min("t").alias("t_min"),
+        F.max("t").alias("t_max"),
     )
+    row = per_node.agg(
+        F.count(
+            F.when(
+                ((F.col("s") == 1) & (F.col("d") == 1))
+                | (F.col("t_min") != F.col("t_max")),
+                1,
+            )
+        ).alias("v")
+    ).collect()[0]
     return int(row["v"])
 
 

@@ -171,32 +171,61 @@ def batch_pairs(
     return _verify(pairs, cfg)
 
 
+def _index_write_partitions(spark: SparkSession) -> int:
+    """Tasks that write one index epoch or the compacted tree:
+    min(N_INDEX_PARTS, spark.sql.shuffle.partitions)."""
+    return min(N_INDEX_PARTS, int(spark.conf.get("spark.sql.shuffle.partitions")))
+
+
 def capped_index_append(
     batch_bands: DataFrame, old_idx: DataFrame | None, cap: int | None
 ) -> DataFrame:
-    """Rows of this batch allowed into the index under the bucket cap: a
-    new row is kept iff existing-members(bucket) + its rank within the
-    batch <= cap, ranked by the same deterministic (xxhash64(id, bucket),
-    id) order capped_by_key uses. Without the cap the accumulated index's
-    boilerplate buckets grow without bound and batch-N join latency
-    degrades exactly the way the batch path was engineered not to.
+    """This batch's index rows, hash-partitioned by ``part`` into
+    _index_write_partitions() tasks, so each writer task owns whole
+    ``part=P`` directories (one file each) and the epoch is written on
+    every core. The task count is explicit: AQE may coalesce a
+    column-only repartition of a small batch back into one task.
 
-    The rank window here IS a per-bucket sort, but over ONE micro-batch —
-    bounded by the stream trigger (maxFilesPerTrigger), not by corpus
-    size — so the mega-bucket-in-one-task hazard the batch path's
-    capped_by_key eliminates cannot arise. Callers count the dropped rows
-    (never a silent truncation). cap=None = passthrough."""
+    Under the bucket cap a new row is kept iff existing-members(bucket) +
+    its rank within the batch <= cap, ranked by the same deterministic
+    (xxhash64(id, bucket), id) order capped_by_key uses. Without the cap
+    the accumulated index's boilerplate buckets grow without bound and
+    batch-N join latency degrades exactly the way the batch path was
+    engineered not to. The rank window is partitioned by (part, bucket):
+    the same groups as by bucket, because part is a function of bucket,
+    and it runs on the part exchange instead of adding its own. The
+    existing-members census aggregates only the old-index rows whose
+    bucket occurs in the batch (a left-semi probe against the broadcast
+    distinct batch buckets) and joins back by broadcast, which keeps the
+    part partitioning.
+
+    The window IS a per-bucket sort, but over ONE micro-batch — bounded
+    by the stream trigger (maxFilesPerTrigger), not by corpus size — so
+    the mega-bucket-in-one-task hazard the batch path's capped_by_key
+    eliminates cannot arise. Callers count the dropped rows (never a
+    silent truncation). cap=None = every row kept."""
+    rows = batch_bands.repartition(
+        _index_write_partitions(batch_bands.sparkSession), "part"
+    )
     if cap is None:
-        return batch_bands
+        return rows
     from pyspark.sql import Window
 
-    w = Window.partitionBy("bucket").orderBy(
+    w = Window.partitionBy("part", "bucket").orderBy(
         F.xxhash64(F.col("id"), F.col("bucket")), F.col("id")
     )
-    ranked = batch_bands.withColumn("_rn", F.row_number().over(w))
+    ranked = rows.withColumn("_rn", F.row_number().over(w))
     if old_idx is not None:
-        old_counts = old_idx.groupBy("bucket").agg(F.count("*").alias("_old"))
-        ranked = ranked.join(old_counts, "bucket", "left").fillna(0, subset=["_old"])
+        batch_buckets = F.broadcast(batch_bands.select("bucket").distinct())
+        old_counts = (
+            old_idx.select("bucket")
+            .join(batch_buckets, "bucket", "left_semi")
+            .groupBy("bucket")
+            .agg(F.count("*").alias("_old"))
+        )
+        ranked = ranked.join(F.broadcast(old_counts), "bucket", "left").fillna(
+            0, subset=["_old"]
+        )
     else:
         ranked = ranked.withColumn("_old", F.lit(0))
     return ranked.where(F.col("_rn") + F.col("_old") <= cap).drop("_rn", "_old")
@@ -235,12 +264,12 @@ def incremental_dedup_query(
         s = batch_bands.sparkSession
         batch_bands = _with_part(batch_bands).localCheckpoint(eager=True)
 
-        # read ONLY the index partitions whose band parts occur in this
-        # batch (<= N_INDEX_PARTS values; the batch is already
-        # checkpointed, so this census is a cheap cached scan)
-        parts = [
-            r["part"] for r in batch_bands.select("part").distinct().collect()
-        ]
+        # one census over the checkpointed batch gives both the index
+        # partitions this batch touches (<= N_INDEX_PARTS values; the
+        # pruned read below scans only those) and its band-row count
+        census = batch_bands.groupBy("part").count().collect()
+        parts = [r["part"] for r in census]
+        rows_in = sum(r["count"] for r in census)
         old_idx = read_index_pruned(s, index_dir, parts)
         # within-batch + new-vs-index pairs, both through the salted skew
         # machinery (operators/pairs.py) — see batch_pairs
@@ -261,28 +290,33 @@ def incremental_dedup_query(
         # Spark-side (the columns of the index we just read), never a
         # driver-local listdir.
         legacy = old_idx is not None and "part" not in old_idx.columns
-        to_append = batch_bands
+        # one part exchange feeds the cap's window and the write; each
+        # writer task owns whole part directories. Under max_bucket_size a
+        # boilerplate bucket saturates at the cap and stops growing, so
+        # the per-batch join cost against it stays bounded across the
+        # stream's life.
+        to_append = capped_index_append(batch_bands, old_idx, cfg.max_bucket_size)
         if cfg.max_bucket_size is not None:
-            # bucket cap on index appends: a boilerplate bucket saturates at
-            # max_bucket_size members and stops growing, so the per-batch
-            # join cost against it stays bounded across the stream's life.
-            # Dropped rows are counted into metrics/ — never silent.
-            to_append = capped_index_append(
-                batch_bands, old_idx, cfg.max_bucket_size
-            ).localCheckpoint(eager=True)
-            n_in = batch_bands.count()
-            n_kept = to_append.count()
-            s.createDataFrame(
-                [("index_append", n_in, n_kept, n_in - n_kept)],
-                "stage string, rows_in long, rows_kept long, rows_dropped long",
-            ).write.mode("overwrite").parquet(
-                os.path.join(work_dir, "metrics", f"batch_id={batch_id}")
-            )
+            # the kept rows are counted on the index write itself
+            kept = Observation()
+            to_append = to_append.observe(kept, F.count(F.lit(1)).alias("rows"))
         w = to_append.drop("part") if legacy else to_append
         w = w.write.mode("overwrite")
         if not legacy:
             w = w.partitionBy("part")
         w.parquet(os.path.join(index_dir, f"batch_id={batch_id}"))
+        if cfg.max_bucket_size is not None:
+            # dropped rows are counted into metrics/ — never silent. The
+            # one row is built on the JVM: no Python worker, one job.
+            rows_kept = kept.get["rows"]
+            s.range(1).select(
+                F.lit("index_append").alias("stage"),
+                F.lit(rows_in).cast("long").alias("rows_in"),
+                F.lit(rows_kept).cast("long").alias("rows_kept"),
+                F.lit(rows_in - rows_kept).cast("long").alias("rows_dropped"),
+            ).write.mode("overwrite").parquet(
+                os.path.join(work_dir, "metrics", f"batch_id={batch_id}")
+            )
 
     writer = (
         batch_bands_stream.writeStream.foreachBatch(process_batch)
@@ -320,6 +354,10 @@ def compact_index(spark: SparkSession, work_dir: str) -> dict:
     see the SAME filesystem Spark writes the index to: a driver-local
     listdir/rename against an HDFS/S3 index would silently no-op.
 
+    The compacted tree is written by _index_write_partitions() tasks after
+    one exchange on ``part``, which also carries the duplicate fold; each
+    ``part=P`` directory holds one file.
+
     Returns {"batches_compacted": int, "rows": int}.
     """
     from lasvdedup_spark import fsio
@@ -340,12 +378,18 @@ def compact_index(spark: SparkSession, work_dir: str) -> dict:
     tmp = os.path.join(work_dir, "_index_compact_tmp")
     fsio.delete(spark, tmp)  # stale tmp from a prior crash
     cols = [c for c in idx.columns if c != "batch_id"]
-    # (id, bucket) identifies a band row (same id+bucket => same sig);
-    # the dedup folds away crash-remnant duplicates instead of carrying
-    # them forward forever
-    out = idx.select(*cols).dropDuplicates(["id", "bucket"])
+    out = idx.select(*cols)
     if "part" not in out.columns:  # legacy un-partitioned layout: add it
         out = _with_part(out)
+    # (id, bucket) identifies a band row (same id+bucket => same sig);
+    # the dedup folds away crash-remnant duplicates instead of carrying
+    # them forward forever. Keying it on (part, id, bucket) is the same
+    # dedup (part is a function of bucket) and runs on the part
+    # exchange, so each writer task owns whole part directories: one
+    # file per part, written on every core.
+    out = out.repartition(_index_write_partitions(spark), "part").dropDuplicates(
+        ["part", "id", "bucket"]
+    )
     # the row count is observed on the write, not re-read from tmp
     obs = Observation()
     out = out.observe(obs, F.count(F.lit(1)).alias("rows"))

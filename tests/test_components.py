@@ -100,6 +100,58 @@ def test_star_violations_zero_iff_star_forest(spark):
         [("B", "A"), ("C", "B")], ["src", "dst"]  # B is src AND dst
     )
     assert _star_violations(chain) == 1
+    two_roots = spark.createDataFrame(
+        [("C", "A"), ("C", "B")], ["src", "dst"]  # C points at two roots
+    )
+    assert _star_violations(two_roots) == 1
+
+
+def _union_find_groups(edges) -> set[frozenset]:
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    groups = {}
+    for x in list(parent):
+        groups.setdefault(find(x), set()).add(x)
+    return {frozenset(g) for g in groups.values()}
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(0, 2), (0, 6), (3, 5), (3, 7), (4, 6), (4, 7)],
+        [(0, 5), (1, 4), (2, 4), (2, 5), (4, 6)],
+    ],
+)
+def test_src_with_two_roots_is_not_converged(spark, edges):
+    """Each graph is one component. A round can leave a src pointing at
+    two different roots with no node both a src and a dst; stopping there
+    split the graph into two stars."""
+    named = [(str(a), str(b)) for a, b in edges]
+    got = _groups(_components(spark, named))
+    assert got == _union_find_groups(named) and len(got) == 1
+
+
+def test_components_match_union_find_on_random_graphs(spark):
+    """Seeded small random graphs: the components equal union-find's."""
+    import random
+
+    rng = random.Random(13)
+    for _ in range(50):
+        n = rng.randint(3, 9)
+        edges = {
+            tuple(rng.sample(range(n), 2)) for _ in range(rng.randint(1, 2 * n))
+        }
+        named = [(str(a), str(b)) for a, b in edges]
+        assert _groups(_components(spark, named)) == _union_find_groups(named), named
 
 
 def test_cc_converges_in_one_round_on_star_input(spark):
